@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for named declared queries to files —
@@ -7,22 +6,14 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: ExplainDump <sfDir> <outDir> <suffix> [query...]
   * Writes <outDir>/<query>_<suffix>.txt for each named query (all queries
-  * when none are named). Session config mirrors Bench/Verify so the plans
-  * are the ones the bench actually runs.
+  * when none are named). The session comes from [[LocalSession]], like
+  * Bench/Verify, so the plans are the ones the bench actually runs.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, rest @ _*) = args
     val only: Set[String] = rest.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -9,9 +9,7 @@ import org.apache.spark.sql.functions._
   * Hashing is md5-hex over seeded strings — deliberately engine-portable
   * (identical in DuckDB/Trino/Spark) so MinHash signatures and fingerprints
   * can be oracle-checked bit-for-bit. md5 hex is ASCII, so lexicographic
-  * `array_min` ordering agrees across engines too. For throughput-critical
-  * paths where portability doesn't matter, `xxhash64`-based variants are
-  * provided (one 64-bit hash per shingle vs a 128-bit digest).
+  * `array_min` ordering agrees across engines too.
   */
 object TextFunctions {
 
@@ -93,35 +91,6 @@ object TextFunctions {
       }
     )
 
-  /** MinHash signature from precomputed (a, b) seeds: component j =
-    * min over shingles of (a + j*b) mod p — classic universal hashing.
-    * Returns array<bigint> of length numHashes. */
-  def minHashSignatureFromPre(preCol: Column, numHashes: Int): Column =
-    transform(
-      sequence(lit(0), lit(numHashes - 1)),
-      j =>
-        array_min(
-          transform(
-            preCol,
-            p => (p.getField("a") + j.cast("long") * p.getField("b")) % MinHashMod
-          )
-        )
-    )
-
-  /** Portable MinHash signature (convenience composition — prefer computing
-    * [[minHashPre]] in its own column when the signature feeds several
-    * consumers). */
-  def minHashSignature(shinglesCol: Column, numHashes: Int): Column =
-    minHashSignatureFromPre(minHashPre(shinglesCol), numHashes)
-
-  /** Fast MinHash signature via xxhash64 (array<bigint>). NOT portable to
-    * the DuckDB oracle — use for production-scale runs. */
-  def minHashSignatureFast(shinglesCol: Column, numHashes: Int): Column =
-    transform(
-      sequence(lit(0), lit(numHashes - 1)),
-      j => array_min(transform(shinglesCol, s => xxhash64(j, s)))
-    )
-
   /** LSH band keys: band b = 60-bit md5 digest prefix of the b-th r-sized
     * slice of the signature (any element-type signature; elements joined
     * with '|'). Two documents share a band key iff that signature slice is
@@ -154,45 +123,6 @@ object TextFunctions {
       lit(0),
       (acc, x) => acc + x
     ).cast("double") / size(sigA)
-
-  /** 64-bit SimHash over tokens: bit b of the result is set iff the sum of
-    * (+1/-1) votes from each token's xxhash64 bit b is positive.
-    * Near-duplicate texts differ in few bits (compare via hamming).
-    *
-    * This nested-HOF form is the executable SPEC (interpreted per lambda —
-    * do not put it in a hot path); production corpus runs use
-    * `Dedup.simHashSignatures`, an explode -> codegen'd bit-vote aggregate
-    * asserted bit-identical to this form. */
-  def simHash(tokensCol: Column): Column = {
-    // votes: per bit, fold +1/-1 across token hashes
-    val bitVotes = aggregate(
-      transform(tokensCol, t => xxhash64(t)),
-      array_repeat(lit(0), 64),
-      (acc, h) =>
-        zip_with(
-          acc,
-          transform(
-            sequence(lit(0), lit(63)),
-            b =>
-              when(
-                call_function("shiftright", h, b).bitwiseAND(1) === 1,
-                1
-              ).otherwise(-1)
-          ),
-          (a, v) => a + v
-        )
-    )
-    aggregate(
-      zip_with(
-        bitVotes,
-        sequence(lit(0), lit(63)),
-        (v, b) =>
-          when(v > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))
-      ),
-      lit(0L),
-      (acc, x) => acc.bitwiseOR(x)
-    )
-  }
 
   /** Hamming distance between two simhash longs. */
   def hammingDistance(a: Column, b: Column): Column =

@@ -4,11 +4,13 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Vector math over `array<float>` embedding columns as pure Column
-  * expressions (higher-order functions — codegen'd, no UDFs, no shuffle).
+  * expressions (native codegen'd expressions — no UDFs, no shuffle).
   *
   * Elements are widened float→double before any arithmetic and folded
-  * sequentially (`aggregate` is a left fold), so results are deterministic
-  * and bit-identical to a sequential oracle evaluation.
+  * sequentially, so results are deterministic and bit-identical to a
+  * sequential oracle evaluation. The higher-order-function forms
+  * (`aggregate` left folds) are `private[graft]`: they are the executable
+  * specs the native expressions are tested against, not a public API.
   */
 object VectorFunctions {
 
@@ -17,17 +19,16 @@ object VectorFunctions {
     aggregate(arr, lit(0.0), (acc, x) => acc + x)
 
   /** Dot product of two float-array columns, computed in double. */
-  def dotProduct(a: Column, b: Column): Column =
+  private[graft] def dotProduct(a: Column, b: Column): Column =
     fsum(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")))
 
   /** L2 norm of a float-array column, computed in double. */
-  def l2Norm(a: Column): Column =
+  private[graft] def l2Norm(a: Column): Column =
     sqrt(fsum(transform(a, x => x.cast("double") * x.cast("double"))))
 
-  /** Cosine similarity of two float-array columns (composable higher-order
-    * form; see [[cosineSimilarityNative]] for the codegen'd hot-path
-    * version with identical results). */
-  def cosineSimilarity(a: Column, b: Column): Column =
+  /** Cosine similarity of two float-array columns (higher-order spec form
+    * of [[cosineSimilarityNative]], identical results). */
+  private[graft] def cosineSimilarity(a: Column, b: Column): Column =
     dotProduct(a, b) / (l2Norm(a) * l2Norm(b))
 
   /** Cosine similarity as a native Catalyst expression — one codegen'd loop
@@ -43,8 +44,9 @@ object VectorFunctions {
     )
   }
 
-  /** Squared Euclidean distance (double). */
-  def squaredDistance(a: Column, b: Column): Column =
+  /** Squared Euclidean distance (double; higher-order spec form of
+    * [[squaredDistanceNative]]). */
+  private[graft] def squaredDistance(a: Column, b: Column): Column =
     fsum(zip_with(a, b, (x, y) => {
       val d = x.cast("double") - y.cast("double")
       d * d
@@ -95,7 +97,7 @@ object VectorFunctions {
   /** Higher-order-function form of [[hyperplaneBucket]] — the executable
     * spec the native expression is tested against (same role as
     * [[cosineSimilarity]] vs [[cosineSimilarityNative]]). */
-  def hyperplaneBucketHof(v: Column, planes: Seq[Seq[Double]]): Column =
+  private[graft] def hyperplaneBucketHof(v: Column, planes: Seq[Seq[Double]]): Column =
     planes.zipWithIndex
       .map { case (plane, p) =>
         when(dotProduct(v, typedlit(plane)) > 0, lit(1 << p)).otherwise(lit(0))

@@ -92,47 +92,18 @@ object Dedup {
       idCol: String,
       textCol: String,
       shingleK: Int,
-      numHashes: Int,
-      portable: Boolean
-  ): DataFrame = {
+      numHashes: Int
+  ): DataFrame =
     // per-shingle digests are per-row expensive: spread a narrow-split
     // scan across cores (no-op at real scale — ScanUtils contract; the
     // signature aggregate is keyed by id, so row order is irrelevant)
-    val exploded = ScanUtils.withScanParallelism(df).select(
-      col(idCol).as("__id"),
-      explode(shingles(col(textCol), shingleK)).as("__s")
+    sigsFromShingleTable(
+      ScanUtils.withScanParallelism(df).select(
+        col(idCol).as("__id"),
+        explode(shingles(col(textCol), shingleK)).as("__s")
+      ),
+      numHashes
     )
-    // per-shingle seeds: portable = one md5 split into (a, b) universal-hash
-    // coefficients; fast = xxhash64 per component (still codegen'd)
-    val (seeded, componentCol) =
-      if (portable) {
-        // native MinHashSeedsExpr: ONE digest per shingle, no hex
-        // round-trip — bit-identical to the conv(substring(md5)) spec
-        // (asserted in ScaleSpec), so the DuckDB oracles are unchanged.
-        // Two projections on purpose: CollapseProject will not duplicate
-        // the non-cheap digest into each field reference.
-        val seeds = org.apache.spark.sql.GraftSqlBridge.column(
-          graft.plans.MinHashSeedsExpr(
-            org.apache.spark.sql.GraftSqlBridge.expression(col("__s")),
-            MinHashMod
-          )
-        )
-        val s = exploded
-          .select(col("__id"), seeds.as("__ab"))
-          .select(col("__id"), col("__ab.a").as("__a"), col("__ab.b").as("__b"))
-        (s, (j: Int) => (col("__a") + lit(j.toLong) * col("__b")) % MinHashMod)
-      } else {
-        (exploded, (j: Int) => xxhash64(lit(j), col("__s")))
-      }
-    val aggCols = (0 until numHashes).map(j => min(componentCol(j)).as(s"__h$j"))
-    seeded
-      .groupBy("__id")
-      .agg(aggCols.head, aggCols.tail: _*)
-      .select(
-        col("__id"),
-        array((0 until numHashes).map(j => col(s"__h$j")): _*).as("__sig")
-      )
-  }
 
   /** Candidate near-duplicate pairs (idA < idB) via MinHash + LSH banding,
     * with the estimated Jaccard from full-signature agreement.
@@ -143,7 +114,6 @@ object Dedup {
     *
     * @param shingleK   word-shingle size (1 = order-insensitive token sets)
     * @param numHashes  signature length (bands * rowsPerBand must equal it)
-    * @param portable   md5 signatures (oracle-portable) vs xxhash64 (faster)
     * @param representativesOnly when true, each doc is paired only with the
     *   MINIMUM id in each of its band buckets instead of with every bucket
     *   member. Turns worst-case quadratic bucket blowup (giant duplicate
@@ -159,10 +129,9 @@ object Dedup {
       shingleK: Int = 1,
       numHashes: Int = 16,
       bands: Int = 4,
-      portable: Boolean = true,
       representativesOnly: Boolean = false
   ): DataFrame = {
-    val sigs = minHashSignatures(df, idCol, textCol, shingleK, numHashes, portable)
+    val sigs = minHashSignatures(df, idCol, textCol, shingleK, numHashes)
     minHashCandidatePairsFromSigs(sigs, numHashes, bands, representativesOnly)
   }
 
@@ -290,7 +259,7 @@ object Dedup {
       .select("id_a", "id_b")
       .localCheckpoint(false)
     val cand = minHashCandidatePairs(
-      sampled, idCol, textCol, shingleK, numHashes, bands, portable = true
+      sampled, idCol, textCol, shingleK, numHashes, bands
     ).select("id_a", "id_b")
       .localCheckpoint(false)
     val hit = truth.join(cand, Seq("id_a", "id_b"), "left_semi")
@@ -347,12 +316,11 @@ object Dedup {
       shingleK: Int = 1,
       numHashes: Int = 16,
       bands: Int = 4,
-      portable: Boolean = true,
       transitive: Boolean = false
   ): DataFrame = {
     // ONE signature computation feeds both passes below (shingle + md5 over
     // the corpus is the dominant cost at scale — never pay it twice)
-    val sigs = minHashSignatures(df, idCol, textCol, shingleK, numHashes, portable)
+    val sigs = minHashSignatures(df, idCol, textCol, shingleK, numHashes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // Pass 1 (exact, linear): rows sharing a FULL signature are certain
@@ -414,10 +382,9 @@ object Dedup {
       threshold: Double = 0.9,
       shingleK: Int = 1,
       numHashes: Int = 16,
-      bands: Int = 4,
-      portable: Boolean = true
+      bands: Int = 4
   ): DataFrame = {
-    val sigs = minHashSignatures(df, idCol, textCol, shingleK, numHashes, portable)
+    val sigs = minHashSignatures(df, idCol, textCol, shingleK, numHashes)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sigMins = sigs.groupBy("__sig").agg(min("__id").as("__min"))
     val exactEdges = sigs
@@ -479,13 +446,12 @@ object Dedup {
       threshold: Double = 0.9,
       shingleK: Int = 1,
       numHashes: Int = 16,
-      bands: Int = 4,
-      portable: Boolean = true
+      bands: Int = 4
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val r = numHashes / bands
     val batchSigs =
-      minHashSignatures(newDocs, idCol, textCol, shingleK, numHashes, portable)
+      minHashSignatures(newDocs, idCol, textCol, shingleK, numHashes)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // (a) exact vs corpus: semi join on the full signature
@@ -562,13 +528,12 @@ object Dedup {
       threshold: Double = 0.8,
       shingleK: Int = 1,
       numHashes: Int = 16,
-      bands: Int = 4,
-      portable: Boolean = true
+      bands: Int = 4
   ): DataFrame = {
     val sets = verifiedSetTable(df, idCol, textCol, shingleK)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val verified =
-      minHashVerifiedPairsPlan(sets, threshold, numHashes, bands, portable)
+      minHashVerifiedPairsPlan(sets, threshold, numHashes, bands)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     verified.count() // EAGER off the cached set table, then release it
     sets.unpersist(blocking = false)
@@ -611,12 +576,11 @@ object Dedup {
       sets: DataFrame,
       threshold: Double,
       numHashes: Int,
-      bands: Int,
-      portable: Boolean
+      bands: Int
   ): DataFrame = {
     val thrPpm = math.round(threshold * 1e6)
     val exploded = sets.select(col("__id"), explode(col("__set")).as("__s"))
-    val sigs = sigsFromShingleTable(exploded, numHashes, portable)
+    val sigs = sigsFromShingleTable(exploded, numHashes)
 
     // certain dups: canonical set digest, group-min drop — exact by
     // construction, giant identical clusters cost one groupBy. EMPTY sets
@@ -673,26 +637,25 @@ object Dedup {
     * shingle stream. */
   private def sigsFromShingleTable(
       exploded: DataFrame,
-      numHashes: Int,
-      portable: Boolean
+      numHashes: Int
   ): DataFrame = {
-    val (seeded, componentCol) =
-      if (portable) {
-        val seeds = org.apache.spark.sql.GraftSqlBridge.column(
-          graft.plans.MinHashSeedsExpr(
-            org.apache.spark.sql.GraftSqlBridge.expression(col("__s")),
-            MinHashMod
-          )
-        )
-        val s = exploded
-          .select(col("__id"), seeds.as("__ab"))
-          .select(col("__id"), col("__ab.a").as("__a"), col("__ab.b").as("__b"))
-        (s, (j: Int) => (col("__a") + lit(j.toLong) * col("__b")) % MinHashMod)
-      } else {
-        (exploded, (j: Int) => xxhash64(lit(j), col("__s")))
-      }
-    val aggCols = (0 until numHashes).map(j => min(componentCol(j)).as(s"__h$j"))
-    seeded
+    // native MinHashSeedsExpr: ONE md5 digest per shingle split into the
+    // (a, b) universal-hash coefficients, no hex round-trip — bit-identical
+    // to the conv(substring(md5)) spec (asserted in ScaleSpec), so the
+    // DuckDB oracles are unchanged. Two projections on purpose:
+    // CollapseProject will not duplicate the non-cheap digest into each
+    // field reference.
+    val seeds = org.apache.spark.sql.GraftSqlBridge.column(
+      graft.plans.MinHashSeedsExpr(
+        org.apache.spark.sql.GraftSqlBridge.expression(col("__s")),
+        MinHashMod
+      )
+    )
+    val aggCols = (0 until numHashes).map(j =>
+      min((col("__a") + lit(j.toLong) * col("__b")) % MinHashMod).as(s"__h$j"))
+    exploded
+      .select(col("__id"), seeds.as("__ab"))
+      .select(col("__id"), col("__ab.a").as("__a"), col("__ab.b").as("__b"))
       .groupBy("__id")
       .agg(aggCols.head, aggCols.tail: _*)
       .select(
@@ -715,11 +678,10 @@ object Dedup {
       shingleK: Int = 1,
       numHashes: Int = 16,
       bands: Int = 4,
-      portable: Boolean = true,
       transitive: Boolean = false
   ): DataFrame = {
     val pairs = minHashVerifiedPairs(
-      df, idCol, textCol, threshold, shingleK, numHashes, bands, portable)
+      df, idCol, textCol, threshold, shingleK, numHashes, bands)
     val losers =
       (if (transitive) {
          Graphs
@@ -737,23 +699,18 @@ object Dedup {
   /** Per-row 64-bit SimHash signatures (id, simhash), computed as
     * explode-tokens -> codegen'd hash aggregate with one bit-vote `sum`
     * column per signature bit — the same reformulation that took MinHash out
-    * of interpreted higher-order functions (see [[minHashSignatures]]); the
-    * nested-HOF spec form lives in `TextFunctions.simHash` and the fast
-    * variant here is asserted bit-identical to it. Bit b of the result is
-    * set iff more token hashes have bit b set than clear (ties -> 0), with
-    * token multiplicity counted.
-    *
-    * @param portable md5-derived hash bits (two 32-bit halves of the
-    *   digest — identical in DuckDB, so signatures oracle-check
-    *   bit-for-bit) vs xxhash64 bits (faster; matches
-    *   `TextFunctions.simHash`). Docs with NULL text drop out (no tokens to
-    *   vote — they cannot be near-duplicates of anything).
+    * of interpreted higher-order functions (see [[minHashSignatures]]).
+    * Each token's 64 hash bits are the two 32-bit halves of its md5 digest
+    * prefix — identical in DuckDB, so signatures oracle-check bit-for-bit.
+    * Bit b of the result is set iff more token hashes have bit b set than
+    * clear (ties -> 0), with token multiplicity counted. Docs with NULL
+    * text drop out (no tokens to vote — they cannot be near-duplicates of
+    * anything).
     */
   def simHashSignatures(
       df: DataFrame,
       idCol: String,
-      textCol: String,
-      portable: Boolean = true
+      textCol: String
   ): DataFrame = {
     // per-token digests are per-row expensive: spread a narrow-split scan
     // across cores (no-op at real scale — ScanUtils contract; the
@@ -763,23 +720,15 @@ object Dedup {
       explode(tokens(col(textCol))).as("__t")
     )
     // 64 hash bits per token, as plain codegen'd long arithmetic
-    val (hashed, bit) =
-      if (portable) {
-        val h = md5(col("__t"))
-        val src = exploded.select(
-          col("__id"),
-          conv(substring(h, 1, 8), 16, 10).cast("long").as("__hi"),
-          conv(substring(h, 9, 8), 16, 10).cast("long").as("__lo")
-        )
-        val f = (b: Int) =>
-          if (b < 32) shiftright(col("__hi"), b).bitwiseAND(lit(1L))
-          else shiftright(col("__lo"), b - 32).bitwiseAND(lit(1L))
-        (src, f)
-      } else {
-        val src = exploded.select(col("__id"), xxhash64(col("__t")).as("__h"))
-        val f = (b: Int) => shiftright(col("__h"), b).bitwiseAND(lit(1L))
-        (src, f)
-      }
+    val h = md5(col("__t"))
+    val hashed = exploded.select(
+      col("__id"),
+      conv(substring(h, 1, 8), 16, 10).cast("long").as("__hi"),
+      conv(substring(h, 9, 8), 16, 10).cast("long").as("__lo")
+    )
+    def bit(b: Int): Column =
+      if (b < 32) shiftright(col("__hi"), b).bitwiseAND(lit(1L))
+      else shiftright(col("__lo"), b - 32).bitwiseAND(lit(1L))
     // one-pass hash aggregate: token count + 64 per-bit one-counts
     // (map-side partial agg absorbs the explode before any shuffle)
     val aggCols = count(lit(1)).as("__n") +:
@@ -827,7 +776,6 @@ object Dedup {
       idCol: String,
       textCol: String,
       maxHamming: Int = 3,
-      portable: Boolean = true,
       representativesOnly: Boolean = false
   ): DataFrame = {
     // (id, 64-bit signature) — a compact proxy consumed by FOUR divergent
@@ -835,7 +783,7 @@ object Dedup {
     // attach joins): materialize once or the tokenize+digest+vote pass
     // over the corpus runs four times (the dedupNearSimHash persist
     // discipline, lazy here because no driver action follows)
-    val sigs = simHashSignatures(df, idCol, textCol, portable)
+    val sigs = simHashSignatures(df, idCol, textCol)
       .select(col(idCol).as("__id"), col("simhash"))
       .localCheckpoint(false)
     val banded = sigs.withColumn(
@@ -895,10 +843,9 @@ object Dedup {
       idCol: String,
       textCol: String,
       maxHamming: Int = 3,
-      portable: Boolean = true,
       transitive: Boolean = false
   ): DataFrame = {
-    val sigs = simHashSignatures(df, idCol, textCol, portable)
+    val sigs = simHashSignatures(df, idCol, textCol)
       .select(col(idCol).as("__id"), col("simhash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
@@ -1020,10 +967,9 @@ object Dedup {
       idCol: String,
       textCol: String,
       corpusSigs: DataFrame,
-      maxHamming: Int = 3,
-      portable: Boolean = true
+      maxHamming: Int = 3
   ): DataFrame = {
-    val batchSigs = simHashSignatures(newDocs, idCol, textCol, portable)
+    val batchSigs = simHashSignatures(newDocs, idCol, textCol)
       .select(col(idCol).as("__id"), col("simhash"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val corpus =

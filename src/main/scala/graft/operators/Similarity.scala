@@ -1286,7 +1286,9 @@ object Similarity {
     val sub = codebooks.head.head.length
     val m = codebooks.size
     // per-query lut columns: element c of __lut_s = ||q_s - centroid_c||^2
-    // (sequential-fold double, the oracle-portable arithmetic). Queries
+    // (sequential-fold double, the oracle-portable arithmetic) via the
+    // native SquaredDistanceExpr inside one transform over the codebook
+    // literal, so plan size stays independent of codebook size. Queries
     // are small by construction, so the per-element lambda re-evaluation
     // of the slice is irrelevant; the candidate side never runs this.
     // NULL query vectors are dropped here, not downstream: a NULL lut
@@ -1299,7 +1301,7 @@ object Similarity {
         col("query_id") +: (0 until m).map { s =>
           transform(
             array(codebooks(s).map(c => typedlit(c.toArray)): _*),
-            cv => squaredDistance(slice(col("__qv"), s * sub + 1, sub), cv)
+            cv => squaredDistanceNative(slice(col("__qv"), s * sub + 1, sub), cv)
           ).as(s"__lut_$s")
         }: _*
       )
@@ -1622,7 +1624,7 @@ object Similarity {
         col("query_id") +: col("cell") +: (0 until m).map { s =>
           transform(
             array(codebooks(s).map(c => typedlit(c.toArray)): _*),
-            cv => squaredDistance(slice(col("__qres"), s * sub + 1, sub), cv)
+            cv => squaredDistanceNative(slice(col("__qres"), s * sub + 1, sub), cv)
           ).as(s"__lut_$s")
         }: _*
       )

@@ -3,8 +3,6 @@ package graft.plans
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.aggregate
 
 /** Session-extension entry point — the (c) tier of the extension
@@ -12,24 +10,18 @@ import org.apache.spark.sql.execution.aggregate
   * expressions via `SparkSessionExtensions`.
   *
   * Activate at session build time with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`:
-  *   - `cosine_similarity_native` / `squared_distance_native` become
-  *     callable from SQL text, not just the Column API;
-  *   - [[RewriteHofVectorMath]] runs in the optimizer, transparently
-  *     replacing the interpreted higher-order cosine / squared-distance
-  *     folds with the codegen'd native expressions (bit-identical
-  *     results — same sequential double accumulation), so even queries
-  *     written against the composable HOF API get the hot-path plan.
+  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` to make
+  * the native expressions (`cosine_similarity_native`,
+  * `squared_distance_native`, `hilbert_index`, `unicode_normalize`) and the
+  * sketch aggregates (`misra_gries`, `count_min`) callable from SQL text,
+  * not just the Column API.
   *
   * For an already-running session, [[GraftExtensions.register]] adds the
-  * SQL functions and `spark.experimental.extraOptimizations` can carry
-  * the rewrite rule.
+  * same SQL functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  override def apply(ext: SparkSessionExtensions): Unit =
     GraftExtensions.functions.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => RewriteHofVectorMath)
-  }
 }
 
 object GraftExtensions {
@@ -168,94 +160,5 @@ object GraftExtensions {
   def register(spark: SparkSession): Unit =
     functions.foreach { case (ident, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
-}
-
-/** Optimizer rule replacing the canonical higher-order vector-math shapes
-  * (`VectorFunctions.cosineSimilarity` / `squaredDistance`: a left fold of
-  * a `zip_with`/`transform` product) with the native codegen'd
-  * expressions. Interpreted lambda evaluation is the dominant cost of
-  * brute-force similarity scans (PERFORMANCE.md item 1); this rewrite
-  * makes the fix transparent to code written against the composable API.
-  *
-  * The match is deliberately conservative: only the exact fold shape the
-  * library emits (zero literal 0.0, Add merge lambda, identity finish,
-  * element-wise Multiply) is touched, and the replacement is bit-identical
-  * by construction — both forms accumulate doubles sequentially
-  * left-to-right. Anything else is left untouched.
-  */
-object RewriteHofVectorMath extends Rule[LogicalPlan] {
-
-  /** `aggregate(xs, 0.0D, (acc, x) => acc + x)` — the library's fsum. */
-  private def asFoldSum(e: Expression): Option[Expression] = e match {
-    case agg: ArrayAggregate =>
-      val zeroOk = agg.zero match {
-        case Literal(z, org.apache.spark.sql.types.DoubleType) =>
-          z.asInstanceOf[Double] == 0.0
-        case _ => false
-      }
-      val mergeOk = agg.merge match {
-        case LambdaFunction(_: Add, _, _) => true
-        case _                            => false
-      }
-      val finishOk = agg.finish match {
-        case LambdaFunction(v: NamedLambdaVariable, Seq(a: NamedLambdaVariable), _) =>
-          v.exprId == a.exprId
-        case _ => false
-      }
-      if (zeroOk && mergeOk && finishOk) Some(agg.argument) else None
-    case _ => None
-  }
-
-  /** fsum(zip_with(a, b, (x, y) => X * Y)) => dot-product of (a, b). */
-  private def asDot(e: Expression): Option[(Expression, Expression)] =
-    asFoldSum(e).collect {
-      case zw: ZipWith if zw.function.isInstanceOf[LambdaFunction] &&
-        zw.function.asInstanceOf[LambdaFunction].function.isInstanceOf[Multiply] =>
-        (zw.left, zw.right)
-    }
-
-  /** sqrt(fsum(transform(a, x => x' * x'))) => L2 norm of a. */
-  private def asNorm(e: Expression): Option[Expression] = e match {
-    case s: Sqrt =>
-      asFoldSum(s.child).collect {
-        case t: ArrayTransform if t.function.isInstanceOf[LambdaFunction] &&
-          t.function.asInstanceOf[LambdaFunction].function.isInstanceOf[Multiply] =>
-          t.argument
-      }
-    case _ => None
-  }
-
-  /** fsum(zip_with(a, b, (x, y) => (x'-y')*(x'-y'))) => squared distance. */
-  private def asSqDist(e: Expression): Option[(Expression, Expression)] =
-    asFoldSum(e).collect {
-      case zw: ZipWith if zw.function.isInstanceOf[LambdaFunction] && {
-        zw.function.asInstanceOf[LambdaFunction].function match {
-          case m: Multiply =>
-            m.left.isInstanceOf[Subtract] && m.left.semanticEquals(m.right)
-          case _ => false
-        }
-      } =>
-        (zw.left, zw.right)
-    }
-
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case d: Divide =>
-        (asDot(d.left), d.right) match {
-          case (Some((a, b)), m: Multiply) =>
-            (asNorm(m.left), asNorm(m.right)) match {
-              case (Some(na), Some(nb))
-                  if na.semanticEquals(a) && nb.semanticEquals(b) =>
-                CosineSimilarityExpr(a, b)
-              case _ => d
-            }
-          case _ => d
-        }
-      case agg: ArrayAggregate =>
-        asSqDist(agg) match {
-          case Some((a, b)) => SquaredDistanceExpr(a, b)
-          case None         => agg
-        }
     }
 }

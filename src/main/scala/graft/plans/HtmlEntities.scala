@@ -12,7 +12,7 @@ package graft.plans
   *
   * ONE table, two consumers, parity by construction:
   *   - [[Stages]]: (pattern, replacement) regex stages folded into the
-  *     DuckDB oracle's `regexp_replace` chain (RE2-portable: bounded
+  *     DuckDB oracle's `regexp_replace` chain (RE2-portable — bounded
   *     repetition, scoped `(?i:…)`, no backrefs). `&amp;`'s stage (with
   *     its numeric forms `&#38;`/`&#x26;`) is LAST, so `&amp;lt;`
   *     decodes to the literal text `&lt;`, never double-decodes to `<`.

@@ -589,15 +589,12 @@ object HashUtils {
   }
 
   /** All k-gram digests of a token array (space-joined grams), as the
-    * array-data Spark expects from an array<string> expression. Portable
-    * mode: lowercase md5 hex (bit-identical to `md5(array_join(...))`);
-    * fast mode: `xxhash64(gram)` rendered as its decimal string
-    * (bit-identical to `xxhash64(g).cast("string")` — same XXH64 with
-    * Spark's seed 42 over the UTF8 bytes). Empty array below k tokens. */
+    * array-data Spark expects from an array<string> expression: lowercase
+    * md5 hex, bit-identical to `md5(array_join(...))`. Empty array below k
+    * tokens. */
   def gramHashes(
       toks: org.apache.spark.sql.catalyst.util.ArrayData,
-      k: Int,
-      portable: Boolean
+      k: Int
   ): org.apache.spark.sql.catalyst.util.ArrayData = {
     import org.apache.spark.unsafe.types.UTF8String
     val n = toks.numElements()
@@ -623,40 +620,16 @@ object HashUtils {
       t += 1
     }
     val out = new Array[AnyRef](n - k + 1)
-    val digester = if (portable) md.get() else null
+    val digester = md.get()
     var i = 0
     while (i <= n - k) {
-      if (portable) {
-        var j = 0
-        while (j < k) {
-          if (j > 0) digester.update(' '.toByte)
-          digester.update(tb(i + j))
-          j += 1
-        }
-        out(i) = UTF8String.fromString(hexLower(digester.digest()))
-      } else {
-        var len = k - 1
-        var j = 0
-        while (j < k) { len += tb(i + j).length; j += 1 }
-        val buf = new Array[Byte](len)
-        var off = 0
-        j = 0
-        while (j < k) {
-          if (j > 0) { buf(off) = ' '.toByte; off += 1 }
-          val b = tb(i + j)
-          System.arraycopy(b, 0, buf, off, b.length)
-          off += b.length
-          j += 1
-        }
-        val h = org.apache.spark.sql.catalyst.expressions.XXH64
-          .hashUnsafeBytes(
-            buf,
-            org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-            buf.length,
-            42L
-          )
-        out(i) = UTF8String.fromString(java.lang.Long.toString(h))
+      var j = 0
+      while (j < k) {
+        if (j > 0) digester.update(' '.toByte)
+        digester.update(tb(i + j))
+        j += 1
       }
+      out(i) = UTF8String.fromString(hexLower(digester.digest()))
       i += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
@@ -1062,16 +1035,15 @@ case class MinShingleMd5Expr(child: Expression, k: Int)
 /** All word k-gram digests of a token array as ONE codegen'd expression —
   * bit-identical to
   * `transform(sequence(0, size(toks) - k), i => md5(array_join(slice(toks, i+1, k), " ")))`
-  * (portable mode; xxhash64(...).cast("string") otherwise — asserted in
-  * ScaleSpec), the L-gram enumeration of `TextAnalysis.spanDedup`. The
-  * composed form evaluates an interpreted slice + array_join + digest per
+  * (asserted in ScaleSpec), the L-gram enumeration of
+  * `TextAnalysis.spanDedup`. The composed form evaluates an interpreted slice + array_join + digest per
   * POSITION — the PERFORMANCE.md transform(sequence, i =>) O(len x L)
   * interpreted class. This expression is one Java loop: token bytes
   * extracted once, each gram digested directly, one output array.
   * Returns an EMPTY array when the input has fewer than `k` tokens
   * (callers filter those upstream; Spark's descending-sequence wart never
   * enters). */
-case class GramHashesExpr(child: Expression, k: Int, portable: Boolean)
+case class GramHashesExpr(child: Expression, k: Int)
     extends UnaryExpression
     with Serializable {
   require(k >= 1, "gram size must be >= 1")
@@ -1088,11 +1060,11 @@ case class GramHashesExpr(child: Expression, k: Int, portable: Boolean)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
 
   override def nullSafeEval(input: Any): Any =
-    HashUtils.gramHashes(input.asInstanceOf[ArrayData], k, portable)
+    HashUtils.gramHashes(input.asInstanceOf[ArrayData], k)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, s => {
-      s"${ev.value} = graft.plans.HashUtils.gramHashes($s, $k, $portable);"
+      s"${ev.value} = graft.plans.HashUtils.gramHashes($s, $k);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

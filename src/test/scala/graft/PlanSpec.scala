@@ -83,6 +83,19 @@ class PlanSpec extends SparkSpec {
     )
   }
 
+  test("PQ lut builders use the native squared distance (no HOF fold)") {
+    Seq("q_pq_topk", "q_ivfpq_topk").foreach { q =>
+      val p = plan(q)
+      assert(p.contains("squared_distance_native"), s"$q: expected native lut distance:\n$p")
+      // the interpreted HOF squaredDistance shows up as an aggregate( fold
+      // over a zip_with per codebook entry
+      assert(
+        !p.contains("aggregate(") && !p.contains("ArrayAggregate"),
+        s"$q: interpreted HOF fold leaked into the lut plan:\n$p"
+      )
+    }
+  }
+
   test("range join stays an equi-join on bins, never a nested loop") {
     val p = plan("q_range_join")
     assert(
@@ -295,37 +308,6 @@ class PlanSpec extends SparkSpec {
     }
     intercept[Exception] {
       spark.sql("SELECT count_min(v, 4) FROM sketch_in").collect()
-    }
-  }
-
-  test("RewriteHofVectorMath swaps HOF folds for native expressions") {
-    import graft.functions.VectorFunctions
-    import org.apache.spark.sql.functions.col
-    val df = spark.read.parquet(s"$sfDir/embeddings.parquet").limit(50)
-    def q(d: org.apache.spark.sql.DataFrame) = d.select(
-      col("vec_id"),
-      VectorFunctions
-        .cosineSimilarity(col("embedding"), org.apache.spark.sql.functions
-          .reverse(col("embedding")))
-        .as("c"),
-      VectorFunctions
-        .squaredDistance(col("embedding"), org.apache.spark.sql.functions
-          .reverse(col("embedding")))
-        .as("d")
-    )
-    val plain = q(df).collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    val prev = spark.experimental.extraOptimizations
-    try {
-      spark.experimental.extraOptimizations =
-        prev :+ graft.plans.RewriteHofVectorMath
-      val rewritten = q(df)
-      val p = rewritten.queryExecution.executedPlan.toString
-      assert(p.contains("cosine_similarity_native"), s"cosine not rewritten:\n$p")
-      assert(p.contains("squared_distance_native"), s"sqdist not rewritten:\n$p")
-      val got = rewritten.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-      assert(got.sameElements(plain), "rewrite must be bit-identical")
-    } finally {
-      spark.experimental.extraOptimizations = prev
     }
   }
 

@@ -959,7 +959,7 @@ class RandomizedSpec extends SparkSpec {
         .dedupNearMinHash(
           df, "doc_id", "text", threshold,
           shingleK = 1, numHashes = 16, bands = 4,
-          portable = true, transitive = transitive
+          transitive = transitive
         )
         .select("doc_id")
         .collect()

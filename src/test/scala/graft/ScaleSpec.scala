@@ -50,15 +50,6 @@ class ScaleSpec extends SparkSpec {
     assert(got.contains(3L) && got.contains(5L))
   }
 
-  test("fast (xxhash64) minhash mode finds the same duplicate pair") {
-    val pairs = Dedup
-      .minHashCandidatePairs(docs, "doc_id", "text", portable = false)
-      .filter(col("est_jaccard") >= 0.9)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(pairs.contains((1L, 2L)))
-  }
-
   test("ngramJaccardPairs computes exact token-set jaccard") {
     val pairs = Dedup
       .ngramJaccardPairs(docs, "doc_id", "text", shingleK = 1, threshold = 0.5)
@@ -97,29 +88,6 @@ class ScaleSpec extends SparkSpec {
     assert(got.keySet == expected.keySet)
     expected.foreach { case (k, j) =>
       assert(math.abs(got(k) - j) < 1e-12, s"pair $k")
-    }
-  }
-
-  test("agg-form simhash (fast mode) is bit-identical to the HOF spec form") {
-    val d = spark.read
-      .parquet(s"$sfDir/documents.parquet")
-      .filter(col("doc_id") < 200)
-    val hof = d
-      .select(
-        col("doc_id"),
-        TextFunctions.simHash(TextFunctions.tokens(col("text"))).as("simhash")
-      )
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    val agg = Dedup
-      .simHashSignatures(d, "doc_id", "text", portable = false)
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-      .toMap
-    assert(agg.keySet == hof.keySet)
-    agg.foreach { case (id, s) =>
-      assert(s == hof(id), s"simhash mismatch for doc $id")
     }
   }
 
@@ -2698,7 +2666,7 @@ class ScaleSpec extends SparkSpec {
       (12L, "novel document about distributed joins a genuinely"), // dup of 11
       (13L, "entirely fresh text mentioning watermarks and state")
     ).toDF("doc_id", "text")
-    val sigs = Dedup.minHashSignatures(corpus, "doc_id", "text", 1, 16, portable = true)
+    val sigs = Dedup.minHashSignatures(corpus, "doc_id", "text", 1, 16)
     val kept = Dedup
       .dedupNearMinHashIncremental(batch, "doc_id", "text", sigs, threshold = 0.9)
       .select("doc_id")
@@ -4030,17 +3998,6 @@ class ScaleSpec extends SparkSpec {
     val codey = (41 to 50).map(i => w(i.toLong))
     assert(codey.min > prose.max,
       s"target-like docs must outscore all prose: ${codey.min} vs ${prose.max}")
-    // the xxhash64 fast path preserves the semantics (different buckets,
-    // same separation) and stays deterministic
-    val wf = TextAnalysis
-      .dsirLogWeights(
-        corpus, target, "doc_id", "text", numBuckets = 1024, portable = false
-      )
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(wf.size == 50)
-    assert((41 to 50).map(i => wf(i.toLong)).min >
-      (1 to 40).map(i => wf(i.toLong)).max,
-      "fast path must preserve the target-vs-prose separation")
     // selection: the 10 code-like docs dominate a k=10 importance sample
     val picked = TextAnalysis
       .dsirResample(corpus, target, "doc_id", "text", k = 10, numBuckets = 1024)
@@ -4262,7 +4219,7 @@ class ScaleSpec extends SparkSpec {
     }
   }
 
-  test("GramHashesExpr matches the composed slice+digest form in both hash modes") {
+  test("GramHashesExpr matches the composed slice+md5 form") {
     import org.apache.spark.sql.GraftSqlBridge
     val rnd = new scala.util.Random(4242)
     val toksCol = split(lower(col("text")), " ")
@@ -4272,25 +4229,23 @@ class ScaleSpec extends SparkSpec {
         .mkString(" ")
     } ++ Seq("", "one two three four five six seven eight nine ten")
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    for (k <- Seq(2, 8); portable <- Seq(true, false)) {
-      def hash(g: org.apache.spark.sql.Column) =
-        if (portable) md5(g) else xxhash64(g).cast("string")
+    for (k <- Seq(2, 8)) {
       val composed = when(
         size(toksCol) >= k,
         transform(
           sequence(lit(0), size(toksCol) - k),
-          i => hash(array_join(slice(toksCol, i + 1, lit(k)), " "))
+          i => md5(array_join(slice(toksCol, i + 1, lit(k)), " "))
         )
       ).otherwise(array().cast("array<string>"))
       val native = GraftSqlBridge.column(
-        graft.plans.GramHashesExpr(GraftSqlBridge.expression(toksCol), k, portable)
+        graft.plans.GramHashesExpr(GraftSqlBridge.expression(toksCol), k)
       )
       df.select(col("id"), native.as("n"), composed.as("c"))
         .collect()
         .foreach { r =>
           assert(
             r.getSeq[String](1) == r.getSeq[String](2),
-            s"k=$k portable=$portable id=${r.get(0)}"
+            s"k=$k id=${r.get(0)}"
           )
         }
     }

@@ -11,17 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
+    val s = LocalSession
+      .builder(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Reference semantics (PySpark 3.5) assume legacy casting; Spark 4
-      // enables ANSI by default.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config(
         "spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString

@@ -66,7 +66,7 @@ class StressSpec extends SparkSpec {
         .minHashCandidatePairs(
           stressedDocs, "doc_id", "text",
           shingleK = 1, numHashes = 16, bands = bands,
-          portable = true, representativesOnly = true
+          representativesOnly = true
         )
         .count()
     }
@@ -116,7 +116,7 @@ class StressSpec extends SparkSpec {
         .minHashCandidatePairs(
           big, "doc_id", "text",
           shingleK = 1, numHashes = 16, bands = bands,
-          portable = true, representativesOnly = true
+          representativesOnly = true
         )
         .count()
     }
@@ -153,7 +153,7 @@ class StressSpec extends SparkSpec {
         .minHashCandidatePairs(
           big, "doc_id", "text",
           shingleK = 1, numHashes = 16, bands = bands,
-          portable = true, representativesOnly = true
+          representativesOnly = true
         )
         .count()
     }
@@ -321,7 +321,7 @@ class StressSpec extends SparkSpec {
     // must drop) plus 3 genuinely novel docs (all of which must survive)
     val corpusSigs = graft.operators.Dedup
       .minHashSignatures(stressedDocs, "doc_id", "text",
-        shingleK = 1, numHashes = 16, portable = true)
+        shingleK = 1, numHashes = 16)
       .localCheckpoint()
     assert(corpusSigs.count() == stressedDocs.count())
     val copyBatch = origDocs
